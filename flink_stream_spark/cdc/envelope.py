@@ -171,7 +171,9 @@ def apply_cdc_batch(
     # (flink_json_to_iceberg.py:117,144)
     for k in keys:
         batch = batch.filter(F.col(k).isNotNull())
-    reduced = last_per_key(batch, keys, order_cols)
+    # upserts and deletes are two filters of ONE reduce: cache it so
+    # the parse and the reduce run once, not once per consumer
+    reduced = last_per_key(batch, keys, order_cols).persist()
     # exclude exactly the envelope metadata — a source column that
     # happens to start with '_' (legal in Postgres) is data
     meta = {OP_COL, "_table", "_lsn", "_ts_ms"}
@@ -179,12 +181,15 @@ def apply_cdc_batch(
     upserts = reduced.filter(F.col(OP_COL) != "d").select(*data_cols)
     deletes = reduced.filter(F.col(OP_COL) == "d").select(*keys)
     # last_per_key already guarantees ≤1 row per key — skip merge's
-    # duplicate-key aggregate (one Spark job per micro-batch saved)
+    # duplicate-key probe
     kwargs = {}
     if merge_mode != "cow":
         # only ManagedTable takes a mode; IcebergTable's MERGE INTO is
         # already engine-side merge-on-read when the table is v2
         kwargs["mode"] = merge_mode
-    return table.merge(
-        upserts, keys=keys, deletes=deletes, validate_unique_keys=False, **kwargs
-    )
+    try:
+        return table.merge(
+            upserts, keys=keys, deletes=deletes, validate_unique_keys=False, **kwargs
+        )
+    finally:
+        reduced.unpersist()

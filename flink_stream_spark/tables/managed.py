@@ -1034,10 +1034,12 @@ class ManagedTable:
         rewritten (``current LEFT ANTI touched_keys`` ∪ upserts, one
         shuffle on the key / broadcast under AQE); untouched buckets
         carry forward in the manifest untouched. The only driver
-        materialization is the distinct bucket-ID set (<= num_buckets
-        integers — commit metadata, same as an Iceberg manifest
-        rewrite). A wide CDC batch that touches every bucket costs a
-        full-table rewrite (measured: tools/merge_probe.py).
+        materialization is one row per touched bucket (<= num_buckets
+        rows — commit metadata, same as an Iceberg manifest rewrite),
+        from ONE aggregate over upserts ∪ deletes. When that set is
+        empty on an existing table the merge commits nothing and
+        returns the current version. A wide CDC batch that touches every bucket
+        costs a full-table rewrite (measured: tools/merge_probe.py).
 
         ``mode='mor'`` (merge-on-read — the reference's Iceberg v2
         ``write.upsert.enabled`` equality-delete path,
@@ -1054,8 +1056,10 @@ class ManagedTable:
         The at-most-one-row-per-key contract is ENFORCED (a duplicate
         key would otherwise anti-join away every old row for the key
         and then union in every incoming copy, silently breaking the
-        primary-key invariant); the check rides the same aggregate that
-        computes the touched-bucket set, so it costs no extra pass.
+        primary-key invariant); the check rides the upserts ∪ deletes
+        aggregate that computes the touched-bucket set, so it costs no
+        extra pass (only a failing check runs one more query, to name
+        the key).
         Pass ``validate_unique_keys=False`` only for inputs already
         reduced by ``last_per_key``.
         """
@@ -1092,13 +1096,18 @@ class ManagedTable:
         )
 
         try:
-            # one small aggregate: touched buckets + max duplication per bucket
+            # ONE small aggregate over upserts ∪ deletes: the touched
+            # buckets and, when validating, each bucket's max upsert
+            # count of one key (a delete row counts 0: it touches
+            # without duplicating)
+            tagged = upserts.select(*keys, F.lit(1).alias("__u"))
+            if deletes is not None:
+                tagged = tagged.unionByName(deletes.select(*keys, F.lit(0).alias("__u")))
+            tagged = tagged.withColumn("__b", bucket_of_keys)
+            if validate_unique_keys:
+                tagged = tagged.groupBy("__b", *keys).agg(F.sum("__u").alias("__u"))
             per_bucket = (
-                upserts.groupBy(bucket_of_keys.alias("__b"), *keys)
-                .count()
-                .groupBy("__b")
-                .agg(F.max("count").alias("max_dup"))
-                .collect()
+                tagged.groupBy("__b").agg(F.max("__u").alias("max_dup")).collect()
             )
             if validate_unique_keys and any(r["max_dup"] > 1 for r in per_bucket):
                 dup = (
@@ -1114,12 +1123,10 @@ class ManagedTable:
                     f"{kv}; reduce with cdc.last_per_key first"
                 )
             touched = {int(r["__b"]) for r in per_bucket}
+            if not touched and self.exists() and not rebucket:
+                return self.current_version()  # nothing to change: no empty commit
             touched_keys = upserts.select(*keys)
             if deletes is not None:
-                touched |= {
-                    int(r["__b"])
-                    for r in deletes.select(bucket_of_keys.alias("__b")).distinct().collect()
-                }
                 touched_keys = touched_keys.unionByName(deletes.select(*keys))
 
             if not self.exists():

@@ -11,13 +11,19 @@ and snapshot expiry.
 from __future__ import annotations
 
 import json
+import threading
+import time
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from flink_stream_spark.cdc.envelope import apply_cdc_batch, parse_envelopes, last_per_key
-from flink_stream_spark.streaming.cdc_pipeline import replay_cdc_batch, start_cdc_pipeline
+from flink_stream_spark.streaming.cdc_pipeline import (
+    _APPLY_THREAD_PREFIX,
+    replay_cdc_batch,
+    start_cdc_pipeline,
+)
 from flink_stream_spark.streaming.ingest import JsonField, raw_json_transform, start_raw_json_ingest
 from flink_stream_spark.tables.managed import ManagedTable, Warehouse
 
@@ -918,3 +924,166 @@ def test_drift_overflow_capped(spark):
     drift = _drift_fields(df, ACCOUNT, max_new_fields=8)
     assert drift == [f"junk_{i:03d}" for i in range(8)]
     assert _drift_fields(df, ACCOUNT) == [f"junk_{i:03d}" for i in range(32)]
+
+
+def test_replay_keyless_envelopes_commit_nothing(spark, tmp_path):
+    """A table whose only envelopes in a batch carry an op but no key
+    has no surviving change: it must keep its version, not gain an
+    empty one."""
+    wh = Warehouse(str(tmp_path / "wh"))
+    schemas = {"account": ACCOUNT, "product": PRODUCT}
+    keys = {"account": ["user_id"], "product": ["product_id"]}
+
+    def replay(envs):
+        df = spark.createDataFrame([(e,) for e in envs], "raw string")
+        return replay_cdc_batch(spark, df, wh, schemas, keys)
+
+    assert replay([
+        env("account", "c", {"user_id": 1, "email": "a@x", "created_at": 1}, lsn=1, ts_ms=1),
+        env("product", "c", {"product_id": 5, "product_name": "Desk"}, lsn=2, ts_ms=2),
+    ]) == {"account": 1, "product": 1}
+    got = replay([
+        env("account", "u", {"user_id": 1, "email": "b@x", "created_at": 1}, lsn=3, ts_ms=3),
+        env("product", "u", {"product_name": "no key"}, lsn=4, ts_ms=4),
+    ])
+    assert got == {"account": 2, "product": 1}
+    product = wh.table("product_postgres")
+    assert product.current_version() == 1
+    assert [r.asDict() for r in product.read(spark).collect()] == [
+        {"product_id": 5, "product_name": "Desk"}
+    ]
+
+
+def _two_table_log(src, n=50):
+    """One file of ``n`` account and ``n`` product inserts."""
+    src.mkdir(exist_ok=True)
+    with open(src / "e1.jsonl", "w") as f:
+        for i in range(n):
+            f.write(env("account", "c", {"user_id": i, "email": f"a{i}@x", "created_at": i},
+                        lsn=i, ts_ms=i) + "\n")
+            f.write(env("product", "c", {"product_id": i, "product_name": f"p{i}"},
+                        lsn=n + i, ts_ms=n + i) + "\n")
+
+
+def _start_two_table(spark, src, wh, ckpt):
+    return start_cdc_pipeline(
+        spark,
+        str(src),
+        wh,
+        {"account": ACCOUNT, "product": PRODUCT},
+        {"account": ["user_id"], "product": ["product_id"]},
+        checkpoint_dir=str(ckpt),
+    )
+
+
+def test_failing_table_fails_the_trigger(spark, tmp_path, monkeypatch):
+    """One table's failed merge fails the trigger: the batch is not
+    committed to the checkpoint, the other table's apply has finished
+    before the failure surfaces, and a restart without the fault
+    converges to the replay of the same log."""
+    src, ckpt = tmp_path / "topic", tmp_path / "ckpt"
+    _two_table_log(src)
+    wh = Warehouse(str(tmp_path / "wh"))
+    finished = []
+    orig = ManagedTable.merge
+
+    def faulty(self, *args, **kwargs):
+        if self.name == "product_postgres":
+            raise RuntimeError("injected merge fault")
+        time.sleep(0.5)  # still running when the other table fails
+        out = orig(self, *args, **kwargs)
+        finished.append(self.name)
+        return out
+
+    monkeypatch.setattr(ManagedTable, "merge", faulty)
+    q = _start_two_table(spark, src, wh, ckpt)
+    try:
+        with pytest.raises(Exception, match="injected merge fault"):
+            q.processAllAvailable()
+        assert finished == ["account_postgres"]
+        assert not [
+            t for t in threading.enumerate() if t.name.startswith(_APPLY_THREAD_PREFIX)
+        ]
+    finally:
+        q.stop()
+    assert (ckpt / "offsets" / "0").exists()
+    assert not (ckpt / "commits" / "0").exists()
+
+    monkeypatch.undo()
+    q = _start_two_table(spark, src, wh, ckpt)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    ref = Warehouse(str(tmp_path / "ref"))
+    replay_cdc_batch(
+        spark,
+        spark.read.text(str(src)).withColumnRenamed("value", "raw"),
+        ref,
+        {"account": ACCOUNT, "product": PRODUCT},
+        {"account": ["user_id"], "product": ["product_id"]},
+    )
+    for name in ("account_postgres", "product_postgres"):
+        got = sorted(tuple(r) for r in wh.table(name).read(spark).collect())
+        want = sorted(tuple(r) for r in ref.table(name).read(spark).collect())
+        assert got == want and len(got) == 50
+
+
+def test_apply_workers_keep_batch_local_properties(spark, tmp_path, monkeypatch):
+    """The threads applying a trigger's tables carry the micro-batch's
+    job group and batch id, so stopping the query cancels their jobs
+    and their jobs are attributed to the trigger."""
+    src = tmp_path / "topic"
+    _two_table_log(src)
+    seen = []
+    orig = ManagedTable.merge
+
+    def spy(self, *args, **kwargs):
+        sc = spark.sparkContext
+        seen.append((
+            self.name,
+            threading.current_thread().name,
+            sc.getLocalProperty("spark.jobGroup.id"),
+            sc.getLocalProperty("streaming.sql.batchId"),
+        ))
+        return orig(self, *args, **kwargs)
+
+    monkeypatch.setattr(ManagedTable, "merge", spy)
+    q = _start_two_table(spark, src, Warehouse(str(tmp_path / "wh")), tmp_path / "ckpt")
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert sorted(s[0] for s in seen) == ["account_postgres", "product_postgres"]
+    for _, thread, group, batch_id in seen:
+        assert thread.startswith(_APPLY_THREAD_PREFIX)
+        assert group == str(q.runId)
+        assert batch_id == "0"
+
+
+def test_two_table_trigger_job_count_pinned(spark, tmp_path):
+    """A two-table trigger runs one batch scan plus each table's apply
+    — no per-table emptiness probes or drift scans. The first trigger
+    of 50 + 50 envelopes into new tables ran 28 jobs with those probes
+    and 19 without; the bound sits between."""
+    src = tmp_path / "topic"
+    _two_table_log(src)
+    wh = Warehouse(str(tmp_path / "wh"))
+    q = _start_two_table(spark, src, wh, tmp_path / "ckpt")
+    try:
+        q.processAllAvailable()
+        assert q.lastProgress["batchId"] == 0
+    finally:
+        q.stop()
+    tracker = spark.sparkContext.statusTracker()
+    # the status listener runs asynchronously: wait until the count settles
+    jobs, prev = None, -1
+    for _ in range(50):
+        jobs = len(tracker.getJobIdsForGroup(str(q.runId)))
+        if jobs == prev:
+            break
+        prev = jobs
+        time.sleep(0.1)
+    assert wh.table("account_postgres").current_version() == 1
+    assert wh.table("product_postgres").current_version() == 1
+    assert 0 < jobs <= 23, jobs
